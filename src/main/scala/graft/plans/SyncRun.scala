@@ -23,8 +23,9 @@ import graft.sources.{FileSinks, Http, RestSink}
   *   3. diff against the target snapshot (anti-join — J4). Quarantined
   *      keys are withheld from the delete set: a row failing validation
   *      means "don't touch it this run", not "remove it from the target";
-  *   4. upsert every source entity, delete the orphans (distributed,
-  *      idempotent sinks);
+  *   4. upsert every source entity, delete the orphans (idempotent
+  *      sinks, each spread by record key over every task slot — a sink is
+  *      bound by request latency, so the rows must not fold into one task);
   *   5. render the run report from sink counters (S11/A5) + quarantine
   *      count.
   *
@@ -154,8 +155,10 @@ object SyncRun {
       now: () => Instant = () => Instant.now()): Result = {
     val started = now()
 
-    val rawCustomer = customerOverride.getOrElse(
-      graft.Tables.load(spark, sfDir, "customer"))
+    // the warehouse table is both the default source and, always, the diff
+    // target: load it once (each load is one schema-inference job)
+    val warehouse = graft.Tables.load(spark, sfDir, "customer")
+    val rawCustomer = customerOverride.getOrElse(warehouse)
     val validated = SchemaValidation.validate(
       SchemaValidation.coerce(rawCustomer, customerCoercions), customerRules)
     val (validRows, quarantine0) = SchemaValidation.split(validated)
@@ -170,53 +173,52 @@ object SyncRun {
     }
     // the quarantine frame is consumed three times (sink, count, delete
     // withholding) — materialize the (small) slice once instead of
-    // re-scanning + re-validating the raw source per consumer
+    // re-scanning + re-validating the raw source per consumer; the pin is
+    // released on every exit path, a throwing write or assembly included
     val quarantine = quarantine0.localCheckpoint(true)
-    quarantineDir.foreach(d =>
-      quarantine.withColumn("errors", org.apache.spark.sql.functions
-        .concat_ws(",", col("errors")))
-        .write.mode("overwrite").json(d))
-    val nQuarantined = quarantine.count()
+    try {
+      quarantineDir.foreach(d =>
+        quarantine.withColumn("errors", org.apache.spark.sql.functions
+          .concat_ws(",", col("errors")))
+          .write.mode("overwrite").json(d))
+      val nQuarantined = quarantine.count()
 
-    val source = EntityAssembly.toJsonPayload(EntityAssembly.assembleFrom(
-      validCustomer,
-      graft.Tables.load(spark, sfDir, "nation"),
-      graft.Tables.load(spark, sfDir, "orders"),
-      graft.Tables.load(spark, sfDir, "lineitem")))
+      val source = EntityAssembly.toJsonPayload(EntityAssembly.assembleFrom(
+        validCustomer,
+        graft.Tables.load(spark, sfDir, "nation"),
+        graft.Tables.load(spark, sfDir, "orders"),
+        graft.Tables.load(spark, sfDir, "lineitem")))
 
-    // deletes = target − (assembled ∪ quarantined): a quarantined row is
-    // "skip this run", never an implicit delete of its target twin
-    val withheld = source.select("studentUniqueId").union(
-      quarantine.select(col("c_custkey").cast("bigint").as("studentUniqueId"))
-        .filter(col("studentUniqueId").isNotNull))
-    val plan = SyncDiff.plan(
-      source = withheld,
-      target = graft.Tables.load(spark, sfDir, "customer")
-        .select(col("c_custkey").as("studentUniqueId")),
-      keyCols = Seq("studentUniqueId"))
+      // deletes = target − (assembled ∪ quarantined): a quarantined row is
+      // "skip this run", never an implicit delete of its target twin
+      val withheld = source.select("studentUniqueId").union(
+        quarantine.select(col("c_custkey").cast("bigint").as("studentUniqueId"))
+          .filter(col("studentUniqueId").isNotNull))
+      val plan = SyncDiff.plan(
+        source = withheld,
+        target = warehouse.select(col("c_custkey").as("studentUniqueId")),
+        keyCols = Seq("studentUniqueId"))
 
-    // a sink failure must still produce a report (S11 contract: counts +
-    // errors), not abort the run silently
-    val (up, upErr) =
-      try (RestSink.upsert(source, transport, tokens, entityPath), None)
-      catch { case e: Exception => (RestSink.SinkReport(0, 0), Some(s"upsert: ${e.getMessage}")) }
-    val (del, delErr) =
-      try (RestSink.delete(plan.deletes, "studentUniqueId", transport, tokens, entityPath), None)
-      catch { case e: Exception => (RestSink.SinkReport(0, 0), Some(s"delete: ${e.getMessage}")) }
+      // a sink failure must still produce a report (S11 contract: counts +
+      // errors), not abort the run silently
+      val (up, upErr) =
+        try (RestSink.upsert(source, "studentUniqueId", transport, tokens, entityPath), None)
+        catch { case e: Exception => (RestSink.SinkReport(0, 0), Some(s"upsert: ${e.getMessage}")) }
+      val (del, delErr) =
+        try (RestSink.delete(plan.deletes, "studentUniqueId", transport, tokens, entityPath), None)
+        catch { case e: Exception => (RestSink.SinkReport(0, 0), Some(s"delete: ${e.getMessage}")) }
 
-    // every quarantine consumer has run — release the pinned blocks
-    org.apache.spark.sql.graft.bridge.freeLocalCheckpoint(quarantine)
-
-    val finished = now()
-    val report = FileSinks.RunReport(
-      startedAt = started.toString,
-      finishedAt = finished.toString,
-      upsertCount = up.succeeded,
-      deleteCount = del.succeeded,
-      errors = Seq(upErr, delErr).flatten,
-      quarantineCount = nQuarantined)
-    reportDir.foreach(d =>
-      FileSinks.writeReport(report, d, started.toString.replaceAll("[:.]", "-")))
-    Result(up.succeeded, del.succeeded, nQuarantined, report)
+      val finished = now()
+      val report = FileSinks.RunReport(
+        startedAt = started.toString,
+        finishedAt = finished.toString,
+        upsertCount = up.succeeded,
+        deleteCount = del.succeeded,
+        errors = Seq(upErr, delErr).flatten,
+        quarantineCount = nQuarantined)
+      reportDir.foreach(d =>
+        FileSinks.writeReport(report, d, started.toString.replaceAll("[:.]", "-")))
+      Result(up.succeeded, del.succeeded, nQuarantined, report)
+    } finally org.apache.spark.sql.graft.bridge.freeLocalCheckpoint(quarantine)
   }
 }

@@ -77,7 +77,7 @@ object IncrementalSync {
         Tables.load(spark, sfDir, "nation"),
         ordersDelta,
         lineitemDelta))
-    val up = RestSink.upsert(entities, transport, tokens, entityPath)
+    val up = RestSink.upsert(entities, "studentUniqueId", transport, tokens, entityPath)
     val gone = collapsed
       .filter(col("c_mktsegment") =!= EntityAssembly.segment)
       .select(col("c_custkey").as("studentUniqueId"))

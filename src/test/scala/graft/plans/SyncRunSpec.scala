@@ -81,6 +81,20 @@ class SyncRunSpec extends SparkSpec {
     assert(reasons.exists(_.contains("c_name:required_null")))
   }
 
+  test("a throwing quarantine write surfaces and still frees the quarantine pin") {
+    FakeServer.reset()
+    val sc = spark.sparkContext
+    // earlier suites' leftovers are not this run's to account for
+    sc.getPersistentRDDs.valuesIterator.foreach(_.unpersist(blocking = true))
+    val file = java.nio.file.Files.createTempFile("graft_not_a_dir", ".txt")
+    intercept[Exception] {
+      SyncRun.run(spark, sf(), new FakeServer.Fake, new FakeServer.Tokens, "/entities",
+        quarantineDir = Some(file.resolve("quarantine").toString))
+    }
+    assert(sc.getPersistentRDDs.isEmpty)
+    assert(FakeServer.sent.isEmpty) // the run stopped before any sink sent
+  }
+
   test("entity resolution pre-step: two variant spellings upsert ONE entity") {
     import spark.implicits._
     FakeServer.reset()

@@ -1,8 +1,11 @@
 package graft.sources
 
-import java.util.concurrent.ConcurrentHashMap
+import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.TaskContext
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
@@ -15,12 +18,14 @@ import Http._
   */
 object FakeServer {
   val store = new ConcurrentHashMap[String, String]()
-  val posts = new AtomicLong()
-  val deletes = new AtomicLong()
   val auth401s = new AtomicLong()
   val validToken = new java.util.concurrent.atomic.AtomicReference[String]("t0")
+  /** Every authorized POST/DELETE: (method, record key, body or path, the
+    * partition of the task that sent it).
+    */
+  val sent = new ConcurrentLinkedQueue[(String, String, String, Int)]()
 
-  def reset(): Unit = { store.clear(); posts.set(0); deletes.set(0); auth401s.set(0); validToken.set("t0") }
+  def reset(): Unit = { store.clear(); auth401s.set(0); validToken.set("t0"); sent.clear() }
 
   /** Pages of the "snapshot" endpoint: 250 records with ids 0..249. */
   val snapshotSize = 250
@@ -33,13 +38,13 @@ object FakeServer {
       }
       req.method match {
         case "POST" =>
-          posts.incrementAndGet()
           val id = req.body.replaceAll(""".*?"(?:id|studentUniqueId)":(\d+).*""", "$1")
+          sent.add(("POST", id, req.body, TaskContext.getPartitionId()))
           store.put(id, req.body)
           Response(200, "")
         case "DELETE" =>
-          deletes.incrementAndGet()
           val id = req.path.substring(req.path.lastIndexOf('/') + 1)
+          sent.add(("DELETE", id, req.path, TaskContext.getPartitionId()))
           if (store.remove(id) == null) Response(404, "") else Response(204, "")
         case "GET" =>
           val offset = req.params("offset").toInt
@@ -78,23 +83,53 @@ class ConnectorSpec extends SparkSpec {
       Seq("""{"s":"x,\"y\""}""", """{"t":"}{"}"""))
   }
 
+  /** The sink spread contract on a ONE-partition input of `keys` (one
+    * duplicated): every row sent exactly once, from `defaultParallelism`
+    * distinct partitions, and both rows of the duplicated key from one.
+    */
+  private def assertSpread(method: String, keys: Seq[Long], dupKey: Long): Unit = {
+    val sent = FakeServer.sent.asScala.toSeq.filter(_._1 == method)
+    assert(sent.map(_._2).sorted === keys.map(_.toString).sorted)
+    assert(sent.map(_._4).distinct.size === spark.sparkContext.defaultParallelism)
+    assert(sent.filter(_._2 == dupKey.toString).map(_._4).distinct.size === 1)
+  }
+
   test("upsert sink POSTs every row distributed; counts via accumulators") {
     FakeServer.reset()
     import spark.implicits._
-    val df = (0 until 50).map(i => (i.toLong, s"n$i")).toDF("id", "name").repartition(4)
-    val report = RestSink.upsert(df, new FakeServer.Fake, new FakeServer.Tokens, "/entities")
-    assert(report === RestSink.SinkReport(50, 50))
+    val keys = (0L until 50L) :+ 7L
+    val df = keys.zipWithIndex.map { case (k, i) => (k, s"n$i") }.toDF("id", "name").coalesce(1)
+    val report = RestSink.upsert(df, "id", new FakeServer.Fake, new FakeServer.Tokens, "/entities")
+    assert(report === RestSink.SinkReport(51, 51))
     assert(FakeServer.store.size() === 50)
+    assert(FakeServer.sent.asScala.map(_._3).toSet.size === 51) // both rows of key 7 went out
+    assertSpread("POST", keys, dupKey = 7L)
+  }
+
+  test("delete sink spreads a one-partition input over every slot, keyed by id") {
+    FakeServer.reset()
+    import spark.implicits._
+    (0 until 50).foreach(i => FakeServer.store.put(i.toString, "{}"))
+    val keys = (0L until 50L) :+ 7L // the second DELETE of 7 reads 404
+    val df = keys.toDF("id").coalesce(1)
+    val report = RestSink.delete(df, "id", new FakeServer.Fake, new FakeServer.Tokens, "/entities")
+    assert(report === RestSink.SinkReport(51, 51))
+    assert(FakeServer.store.isEmpty)
+    assertSpread("DELETE", keys, dupKey = 7L)
   }
 
   test("401 → refresh → retry once, transparently to the sink") {
     FakeServer.reset()
     FakeServer.validToken.set("t1") // current token t0 is stale: first call 401s
     import spark.implicits._
-    val df = Seq((1L, "a")).toDF("id", "name")
-    val report = RestSink.upsert(df, new FakeServer.Fake, new FakeServer.Tokens, "/entities")
-    assert(report.succeeded === 1)
-    assert(FakeServer.auth401s.get() >= 1) // stale token was rejected, refresh recovered
+    val df = (0 until 64).map(i => (i.toLong, s"n$i")).toDF("id", "name").coalesce(1)
+    val report = RestSink.upsert(df, "id", new FakeServer.Fake, new FakeServer.Tokens, "/entities")
+    assert(report === RestSink.SinkReport(64, 64))
+    assert(FakeServer.store.size() === 64)
+    // the stale token was rejected and the refreshed one sticks within a
+    // task: one rejection per task, not one per row
+    assert(FakeServer.auth401s.get() >= 1)
+    assert(FakeServer.auth401s.get() <= spark.sparkContext.defaultParallelism)
   }
 
   test("delete sink: 404 is success (idempotent under task retry)") {
@@ -117,7 +152,7 @@ class ConnectorSpec extends SparkSpec {
     // source: ids 100..299 → expect upserts 100..299, deletes 0..99
     val source = (100 until 300).map(i => (i.toLong, s"src$i")).toDF("id", "name")
     val plan = SyncDiff.plan(source, target, Seq("id"))
-    RestSink.upsert(plan.upserts, new FakeServer.Fake, new FakeServer.Tokens, "/entities")
+    RestSink.upsert(plan.upserts, "id", new FakeServer.Fake, new FakeServer.Tokens, "/entities")
     RestSink.delete(plan.deletes, "id", new FakeServer.Fake, new FakeServer.Tokens, "/entities")
     val remaining = FakeServer.store.keySet().toArray.map(_.toString.toLong).sorted
     assert(remaining.toSeq === (100L until 300L))
